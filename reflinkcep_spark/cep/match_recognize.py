@@ -164,8 +164,8 @@ Supported subset
   enforces it.  Mutually exclusive with explicit within kwargs.
 
 Scale shape: identical to every kernel CEP query — project to the
-referenced columns, ONE exchange on the partition key, Arrow-batched
-``applyInPandas``; the measures projection is plain column algebra on
+referenced columns, ONE exchange on the partition key, Arrow grouped
+map (``applyInArrow``); the measures projection is plain column algebra on
 the kernel's output.
 """
 
@@ -1327,8 +1327,9 @@ def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
     window columns BEFORE the kernel.  Plan shape: the window needs the
     same hash(partition key) distribution the kernel's grouped map
     does, so repartition ONCE here and assert ``pre_partitioned`` to
-    the kernel — Exchange → Sort → Window → FlatMapGroupsInPandas, one
-    exchange total, exactly the no-navigation plan's count.  A caller
+    the kernel — Exchange → Sort → Window → FlatMapGroupsInArrow, one
+    exchange total, exactly the no-navigation plan's count, over the
+    kernel's own partition count (``kernel_partitions``).  A caller
     that already asserted ``pre_partitioned=True`` (bucketed log) keeps
     its zero-exchange plan: the window reuses the bucket clustering."""
     nav = t.get("nav_columns") or {}
@@ -1337,17 +1338,16 @@ def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
+    from reflinkcep_spark.operators.cep import kernel_partitions
+
     kernel_kwargs = dict(kernel_kwargs)
     if not kernel_kwargs.get("pre_partitioned"):
-        n_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        df = df.repartition(n_parts, t["partition_by"])
+        df = df.repartition(kernel_partitions(df.sparkSession), t["partition_by"])
         kernel_kwargs["pre_partitioned"] = True
     w = Window.partitionBy(t["partition_by"]).orderBy(t["order_by"])
     # Tied order values would make PREV/NEXT adjacency nondeterministic:
     # the window sort breaks ties arbitrarily while the kernel's stable
-    # mergesort keeps arrival order, so "the previous row" could differ
+    # Arrow sort keeps arrival order, so "the previous row" could differ
     # between the two — and between runs.  SQL:2016 leaves tied ORDER BY
     # implementation-dependent; we raise instead (in-plan rail folded
     # into the lag evaluation: duplicates sort adjacent, one comparison

@@ -2,17 +2,20 @@
 
 Physical strategy
 -----------------
-The pattern kernel is a *grouped-map* operator:
+The pattern kernel is an Arrow *grouped-map* operator:
 
-    df.repartition(keys).groupBy(keys).applyInPandas(run_nfa, schema)
+    df.repartition(n, keys).groupBy(keys).applyInArrow(run_key, schema)
 
-Each key's substream is matched independently — the one shuffle on the
-partition key is the only data movement, and parallelism scales with
-the number of keys (users/sessions/devices), which is exactly the axis
-that grows with data size.  Within a group, rows are sorted by the
-order column and fed through the NFA run-set engine
-(:mod:`reflinkcep_spark.cep.runtime`); Arrow carries the batch across
-the JVM↔Python boundary once in each direction.
+with ``n`` = :func:`kernel_partitions` (the cluster's
+``defaultParallelism``: one task per core).  Each key's substream is
+matched independently — the one shuffle on the partition key is the
+only data movement, and parallelism scales with the number of keys
+(users/sessions/devices), which is exactly the axis that grows with
+data size.  Within a group, the ``pyarrow.Table`` is sorted by the
+order column with Arrow and fed through the NFA run-set engine
+(:mod:`reflinkcep_spark.cep.runtime`); the matches go back as Arrow
+arrays whose capture structs are ``take``-n from the input columns, so
+no pandas frame is built on either side.
 
 For patterns with a pure-Catalyst equivalent (plain filters, strict
 sequences), :mod:`reflinkcep_spark.operators.fastpath` avoids Python
@@ -35,61 +38,83 @@ nothing, mirroring the reference's omitted-key rule (DST.py:302-311).
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+import math
+from typing import Sequence
 
 import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    DecimalType,
+    LongType,
+    NumericType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from reflinkcep_spark.cep.compiler import compile_query
 from reflinkcep_spark.cep.query import Query
 from reflinkcep_spark.cep.runtime import MatchEngine
 
-__all__ = ["match_pattern", "MatchLimitExceeded"]
+__all__ = ["match_pattern", "MatchLimitExceeded", "kernel_partitions"]
 
 
 class MatchLimitExceeded(RuntimeError):
     """Raised when a key's live run-set exceeds ``max_active_runs``."""
 
 
-def records(pdf: pd.DataFrame, cols: Sequence[str]) -> list[dict]:
-    """``pdf[cols].to_dict("records")`` without the per-call DataFrame
-    machinery: per-column ``tolist()`` + zip builds the same dicts
-    (identical value boxing — int/float/str natives, NaN, None,
-    Timestamps; pinned in tests/test_spark_kernel.py) at ~1/5 the cost
-    on per-group call sizes.  ``run_group`` runs once per key, so the
-    constant overhead of ``to_dict`` is paid per GROUP — on the sf0.1
-    event log (1,500 groups of ~67 rows) the swap measured 1.78 s →
-    0.33 s of per-task Python across the kernel's groups."""
-    columns = [pdf[c].tolist() for c in cols]
-    return [dict(zip(cols, row)) for row in zip(*columns)]
+def over_run_limit(
+    engine: MatchEngine, max_active_runs: int, key, on_limit: str = "raise"
+) -> bool:
+    """The one run-limit check of the batch and streaming kernels:
+    False while the key's live run-set is within ``max_active_runs``;
+    past it, raise :class:`MatchLimitExceeded` naming ``key``
+    (``on_limit="raise"``) or return True so the caller truncates the
+    key (``"truncate"``)."""
+    if len(engine.runs) <= max_active_runs:
+        return False
+    if on_limit == "raise":
+        raise MatchLimitExceeded(
+            f"live run-set exceeded {max_active_runs} for key {key!r}; "
+            "pattern is likely nd-relaxed over a hot key — add a stricter "
+            "condition or raise the limit"
+        )
+    return True
 
 
-def frame(
-    rows: list[dict], cols: Sequence[str], empty: pd.DataFrame | None = None
-) -> pd.DataFrame:
-    """``pd.DataFrame(rows, columns=cols)`` for the kernels' output
-    side, without the per-call list-of-dicts inference machinery (the
-    ``records`` rationale applied to the return path: the grouped
-    kernels build one frame per KEY, and most keys emit zero matches).
-    Every row dict carries every column — the kernels build them that
-    way — so a dict-of-lists constructor produces the identical frame
-    (same column order, same per-column dtype inference; pinned in
-    tests/test_spark_kernel.py).  ``empty`` is the caller's cached
-    zero-row frame (object-dtype columns, exactly what the
-    list-of-dicts constructor yields for no rows); measured across
-    1,500 per-group calls: 0.82 s → 0.13 s."""
-    if not rows:
-        return empty if empty is not None else pd.DataFrame(columns=list(cols))
-    return pd.DataFrame({c: [r[c] for r in rows] for c in cols})
+def kernel_partitions(spark: SparkSession) -> int:
+    """Partition count of the kernel's keyed exchange: one task per
+    core of the cluster (``defaultParallelism``).  The per-key NFA is
+    CPU-bound Python, so more partitions than cores only add per-task
+    overhead, and fewer leave cores idle.  An explicit count also keeps
+    AQE's size-based coalescing away from the exchange, which would
+    squash a few MB of events onto 1-2 tasks."""
+    return spark.sparkContext.defaultParallelism
+
+
+def _null_as(data_type):
+    """The value a NULL of ``data_type`` reaches conditions as: NaN for
+    integral and floating columns and NaT for timestamps, as the pandas
+    form of the column gives it — a comparison with it is False instead
+    of the ``TypeError`` that ``None`` would raise.  Other types keep
+    ``None``."""
+    if isinstance(data_type, NumericType) and not isinstance(data_type, DecimalType):
+        return math.nan
+    if isinstance(data_type, (TimestampType, TimestampNTZType)):
+        return pd.NaT
+    return None
 
 
 def _capture_lens(captured, names):
     """SQL:2016 lexicographic preference key: per-variable capture
     lengths in PATTERN order.  The ONE definition — the per-start fold
-    in ``run_group`` and ``_sql_select`` must rank identically."""
+    in ``run_key`` and ``_sql_select`` must rank identically."""
     return tuple(len(captured.get(n) or ()) for n in names)
 
 
@@ -196,7 +221,7 @@ def _sql_select(matches, skip, prefer, names):
     order (first-completing ≈ reluctant) rather than start order.
 
     ``matches`` is ``[(min_pos, max_pos, emission_idx, captures)…]``.
-    The caller (``run_group``) already folds the per-start preference
+    The caller (``run_key``) already folds the per-start preference
     DURING the feed loop, so this normally receives one candidate per
     start — the fold keeps a hot key's memory at O(starts) instead of
     the full NoSkip emission's O(starts²) match records (the function
@@ -217,7 +242,7 @@ def _sql_select(matches, skip, prefer, names):
             continue
         # equal length tuples = identical row assignment (contiguous
         # rows, validated by _validate_sql_pattern); max/min are stable
-        # (first emitted wins a tie), matching the run_group fold.
+        # (first emitted wins a tie), matching the run_key fold.
         cands = by_start[s]
         chosen = (
             max(cands, key=lambda m: _capture_lens(m[3], names))
@@ -355,7 +380,7 @@ def match_pattern(
         ``sinks.write_bucketed(events, ..., key=partition_by)`` and
         read back via ``spark.table`` — so the kernel skips its
         explicit repartition and the whole plan runs WITHOUT ANY
-        shuffle: Scan → Sort (within buckets) → FlatMapGroupsInPandas
+        shuffle: Scan → Sort (within buckets) → FlatMapGroupsInArrow
         (verified in tests/test_bucketed_sink.py).  This is the
         standing-event-log shape at 100 TB: bucket the log once on
         the CEP key at ingest, then every pattern query over it is
@@ -451,10 +476,13 @@ def match_pattern(
     automaton = compile_query(query)
     strategy = query.strategy
     names = list(query.names)
-    out_columns = [f.name for f in out_schema.fields]
-    # Zero-match groups are the common case; hand them one cached
-    # empty frame instead of re-running the DataFrame constructor.
-    empty_out = pd.DataFrame(columns=out_columns)
+    arrow_out = to_arrow_schema(out_schema)
+    event_fields = list(to_arrow_type(event_struct))
+    capture_type = to_arrow_type(ArrayType(event_struct))
+    # Zero-match keys are the common case; hand them one cached empty
+    # table instead of building one per key.
+    empty_out = arrow_out.empty_table()
+    null_as = {c: _null_as(field_by_name[c].dataType) for c in attr_cols}
     sole_type = None
     if type_col is None:
         declared = list(query.schema.keys())
@@ -462,35 +490,50 @@ def match_pattern(
 
     # Run pruning (runtime.feed) assumes stamps are non-decreasing in
     # feed order; with a decoupled stamp column that is a DATA property
-    # the plan cannot guarantee — check it per group (vectorized, ~free
-    # next to the NFA loop) instead of documenting it and silently
-    # dropping or inventing matches when real data violates it.
+    # the plan cannot guarantee — check it per key (one pass over the
+    # stamps, ~free next to the NFA loop) instead of documenting it and
+    # silently dropping or inventing matches when real data violates it.
     check_stamps = within_col is not None and within is not None
 
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by, kind="mergesort")
-        key_values = {k: pdf.iloc[0][k] for k in keys} if len(pdf) else {}
-        if check_stamps and len(pdf):
-            s = pdf[stamp_col]
-            if bool(s.isna().any()):
+    def column(table: pa.Table, name: str, data_type: pa.DataType) -> pa.Array:
+        # Timestamps arrive zoned in the session time zone but must
+        # leave in the UTC form of out_schema: a metadata-only cast.
+        arr = table.column(name).combine_chunks()
+        return arr if arr.type == data_type else arr.cast(data_type)
+
+    def values(table: pa.Table, name: str) -> list:
+        col = table.column(name)
+        vals = col.to_pylist()
+        na = null_as[name]
+        if na is not None and col.null_count:
+            vals = [na if v is None else v for v in vals]
+        return vals
+
+    def run_key(table: pa.Table) -> pa.Table:
+        table = table.sort_by(order_by)
+        key_values = {k: table.column(k)[0].as_py() for k in keys}
+        cols = [values(table, c) for c in attr_cols]
+        recs = [dict(zip(attr_cols, row)) for row in zip(*cols)]
+        if check_stamps:
+            stamps = cols[attr_cols.index(stamp_col)]
+            if any(st is None or st != st for st in stamps):
                 raise ValueError(
                     f"within_col {stamp_col!r} has NULL stamps for key "
                     f"{key_values!r} — the within bound needs a stamp on "
                     "every event"
                 )
-            regress = s.diff() < 0
-            if bool(regress.any()):
-                at = pdf.loc[regress.idxmax(), order_by]
-                raise ValueError(
-                    f"within_col {stamp_col!r} regresses at "
-                    f"{order_by}={at!r} for key {key_values!r} — stamps "
-                    f"must be non-decreasing in {order_by} order (run "
-                    "pruning assumes monotone stamps); order by the stamp "
-                    "column or fix the stamp derivation"
-                )
-        recs = records(pdf, attr_cols)
+            for i in range(1, len(stamps)):
+                if stamps[i] < stamps[i - 1]:
+                    raise ValueError(
+                        f"within_col {stamp_col!r} regresses at "
+                        f"{order_by}={recs[i][order_by]!r} for key "
+                        f"{key_values!r} — stamps must be non-decreasing "
+                        f"in {order_by} order (run pruning assumes "
+                        "monotone stamps); order by the stamp column or "
+                        "fix the stamp derivation"
+                    )
         if type_col is not None:
-            types: Iterable = pdf[type_col].tolist()
+            types = cols[attr_cols.index(type_col)]
         else:
             types = [sole_type] * len(recs)
 
@@ -539,13 +582,7 @@ def match_pattern(
                         captured,
                     )
                 )
-            if len(engine.runs) > max_active_runs:
-                if on_limit == "raise":
-                    raise MatchLimitExceeded(
-                        f"live run-set exceeded {max_active_runs} for key "
-                        f"{key_values!r}; pattern is likely nd-relaxed over a "
-                        f"hot key — add a stricter condition or raise the limit"
-                    )
+            if over_run_limit(engine, max_active_runs, key_values, on_limit):
                 truncated = True
                 break
         if sql_skip is not None:
@@ -553,45 +590,66 @@ def match_pattern(
                 [c for c, _k in best_by_start.values()], sql_skip,
                 sql_prefer, names,
             )
-        rows = []
-        for match_seq, (mn, mx, _i, captured) in enumerate(collected):
-            row = dict(key_values)
-            row["match_seq"] = match_seq
-            row["start_ord"] = recs[mn][order_by] if mn is not None else None
-            row["end_ord"] = recs[mx][order_by] if mx is not None else None
-            for name in names:
-                idxs = captured.get(name)
-                row[name] = (
-                    [recs[i] for i in idxs] if idxs is not None else None
-                )
-            rows.append(row)
-        if truncated:
-            # Degrade: keep what matched, flag the key, move on.
-            sentinel = dict(key_values)
-            sentinel["match_seq"] = -1
-            sentinel["start_ord"] = None
-            sentinel["end_ord"] = None
-            for name in names:
-                sentinel[name] = None
-            rows.append(sentinel)
-        return frame(rows, out_columns, empty_out)
+        if not collected and not truncated:
+            return empty_out
 
-    # Pin the kernel's parallelism: AQE's size-based partition
-    # coalescing sees a few MB of shuffled events and would squash the
-    # exchange to 1-2 partitions, serializing the Python NFA onto 1-2
-    # cores (measured 32→2 tasks at sf0.1).  An explicit repartition
-    # with a fixed count is exempt from coalescing, and groupBy reuses
-    # its hash partitioning, so there is still exactly ONE shuffle.
+        starts = [mn for mn, _mx, _i, _c in collected]
+        ends = [mx for _mn, mx, _i, _c in collected]
+        captures = [c for _mn, _mx, _i, c in collected]
+        seqs = list(range(len(collected)))
+        if truncated:
+            # Degrade: keep what matched, flag the key with ONE sentinel
+            # row (match_seq -1, NULL bounds and captures), move on.
+            starts.append(None)
+            ends.append(None)
+            captures.append({})
+            seqs.append(-1)
+        n_out = len(seqs)
+        # Output values are taken straight from the input arrays, so
+        # NULLs, timestamps and decimals round-trip untouched.
+        events = pa.StructArray.from_arrays(
+            [column(table, c, f.type) for c, f in zip(attr_cols, event_fields)],
+            fields=event_fields,
+        )
+        order_col = column(table, order_by, arrow_out.field("start_ord").type)
+        first_row = pa.array([0] * n_out, pa.int64())
+        out = [
+            column(table, k, arrow_out.field(k).type).take(first_row)
+            for k in keys
+        ]
+        out.append(pa.array(seqs, pa.int64()))
+        out.append(order_col.take(pa.array(starts, pa.int64())))
+        out.append(order_col.take(pa.array(ends, pa.int64())))
+        for name in names:
+            offsets, flat, is_null = [0], [], []
+            for captured in captures:
+                idxs = captured.get(name)
+                is_null.append(idxs is None)
+                if idxs is not None:
+                    flat.extend(idxs)
+                offsets.append(len(flat))
+            out.append(
+                pa.ListArray.from_arrays(
+                    pa.array(offsets, pa.int32()),
+                    events.take(pa.array(flat, pa.int64())),
+                    type=capture_type,
+                    mask=pa.array(is_null, pa.bool_()),
+                )
+            )
+        return pa.Table.from_arrays(out, schema=arrow_out)
+
     if keys and pre_partitioned:
         # Caller-asserted key-clustered input (bucketed table): groupBy
-        # alone satisfies FlatMapGroupsInPandas' required distribution
-        # from the scan's bucket partitioning — zero exchanges.
+        # alone satisfies the grouped map's required distribution from
+        # the scan's bucket partitioning — zero exchanges.
         grouped = projected.groupBy(*keys)
     elif keys:
-        n_parts = int(
-            projected.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        grouped = projected.repartition(n_parts, *keys).groupBy(*keys)
+        # The explicit count (see kernel_partitions) is exempt from
+        # AQE coalescing, and groupBy reuses its hash partitioning, so
+        # there is exactly ONE shuffle.
+        grouped = projected.repartition(
+            kernel_partitions(projected.sparkSession), *keys
+        ).groupBy(*keys)
     else:
         # Total-order CEP over an unkeyed stream is inherently ONE
         # group = one task = one core, regardless of cluster size.
@@ -607,4 +665,4 @@ def match_pattern(
             stacklevel=2,
         )
         grouped = projected.groupBy()
-    return grouped.applyInPandas(run_group, schema=out_schema)
+    return grouped.applyInArrow(run_key, schema=out_schema)

@@ -4,10 +4,14 @@ Centralized so tests, the driver entry point and bench all run with the
 same scale-minded defaults:
 
 * AQE on (runtime shuffle-partition coalescing, skew-join splitting),
-* Arrow on (the CEP kernel is an ``applyInPandas`` operator — Arrow
-  batches are the JVM↔Python transport),
-* modest shuffle parallelism sized for local[32] test runs; a real
-  cluster deployment overrides via ``extra_conf`` / spark-submit conf.
+* Arrow on (Arrow batches are the JVM↔Python transport of every
+  Python operator),
+* ``spark.sql.shuffle.partitions`` 32 by default (``SPARK_GRAFT_SHUFFLE``):
+  it sizes the plain Spark shuffles and the streaming state store's
+  partitions.  The batch CEP kernel does not read it: it repartitions
+  to ``defaultParallelism`` (``operators.cep.kernel_partitions``).  A
+  real cluster deployment overrides via ``extra_conf`` / spark-submit
+  conf.
 """
 
 from __future__ import annotations

@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from reflinkcep_spark.operators.cep import frame as _frame
-from reflinkcep_spark.operators.cep import records as _records
+from reflinkcep_spark.streaming.cep import frame as _frame
+from reflinkcep_spark.streaming.cep import records as _records
 
 __all__ = ["not_followed_by_stream", "not_next_stream"]
 

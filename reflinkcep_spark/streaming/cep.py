@@ -60,10 +60,34 @@ from pyspark.sql.types import ArrayType, BinaryType, LongType, StructField, Stru
 from reflinkcep_spark.cep.compiler import compile_query
 from reflinkcep_spark.cep.query import Query
 from reflinkcep_spark.cep.runtime import MatchEngine, _Cfg
-from reflinkcep_spark.operators.cep import frame as _frame
-from reflinkcep_spark.operators.cep import records as _records
+from reflinkcep_spark.operators.cep import over_run_limit
 
 __all__ = ["match_pattern_stream"]
+
+
+def records(pdf: pd.DataFrame, cols: Sequence[str]) -> list[dict]:
+    """``pdf[cols].to_dict("records")`` without the per-call DataFrame
+    machinery: per-column ``tolist()`` + zip builds the same dicts
+    (identical value boxing — int/float/str natives, NaN, None,
+    Timestamps; pinned in tests/test_spark_kernel.py) at ~1/5 the cost
+    on per-key call sizes.  The streaming ``step`` functions run once per
+    key and micro-batch, so ``to_dict``'s constant overhead would be
+    paid per KEY."""
+    columns = [pdf[c].tolist() for c in cols]
+    return [dict(zip(cols, row)) for row in zip(*columns)]
+
+
+def frame(rows: list[dict], cols: Sequence[str]) -> pd.DataFrame:
+    """``pd.DataFrame(rows, columns=cols)`` for the output side,
+    without the per-call list-of-dicts inference machinery (the
+    ``records`` rationale applied to the return path).  Every row dict
+    carries every column — the ``step`` functions build them that way —
+    so a dict-of-lists constructor produces the identical frame (same
+    column order, same per-column dtype inference; pinned in
+    tests/test_spark_kernel.py)."""
+    if not rows:
+        return pd.DataFrame(columns=list(cols))
+    return pd.DataFrame({c: [r[c] for r in rows] for c in cols})
 
 
 def _save_engine(
@@ -291,11 +315,7 @@ def match_pattern_stream(
                     )
                 rows.append(row)
                 match_seq += 1
-            if len(engine.runs) > max_active_runs:
-                raise RuntimeError(
-                    f"live run-set exceeded {max_active_runs} for key "
-                    f"{key!r}; add a stricter condition or raise the limit"
-                )
+            over_run_limit(engine, max_active_runs, key_values)
         return rows, match_seq, last_stamp
 
     def step(key: tuple, pdf_iter: Iterable[pd.DataFrame], state):
@@ -325,7 +345,7 @@ def match_pattern_stream(
                 )
             state.remove()
             if rows:
-                yield _frame(rows, out_columns)
+                yield frame(rows, out_columns)
             return
 
         engine = MatchEngine(automaton, strategy, within)
@@ -342,12 +362,12 @@ def match_pattern_stream(
         if chunks:
             pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
             pdf = pdf.sort_values(order_by, kind="mergesort")
-            records = _records(pdf, attr_cols)
+            recs = records(pdf, attr_cols)
             types: Iterable = (
                 pdf[type_col].tolist() if type_col is not None
-                else [sole_type] * len(records)
+                else [sole_type] * len(recs)
             )
-            incoming = list(zip(types, records))
+            incoming = list(zip(types, recs))
 
         if event_time_col is not None:
             # Watermark-gated reorder buffer: park everything, release
@@ -401,7 +421,7 @@ def match_pattern_stream(
         if idle_timeout_ms:
             state.setTimeoutDuration(idle_timeout_ms)
         if rows:
-            yield _frame(rows, out_columns)
+            yield frame(rows, out_columns)
 
     return projected.groupBy(*[F.col(k) for k in keys]).applyInPandasWithState(
         step,

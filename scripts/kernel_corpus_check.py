@@ -3,9 +3,11 @@
 through the Spark batch kernel and compare with the reference engine.
 
 The fast pytest corpus checks the pure-Python runtime; this script
-pushes every enumerated query through the real applyInPandas kernel
-(shuffle → per-key sort → NFA → Arrow round trip) on a 2-key frame.
-Matches are compared per key as ordered capture-id sequences.
+pushes every enumerated query through the real applyInArrow kernel
+(shuffle → per-key Arrow sort → NFA → Arrow capture arrays) on a 2-key
+frame.  Matches are compared per key as ordered capture-id sequences.
+It needs the reference engine checkout that tests/test_differential.py
+imports; without it the script cannot start.
 
 Also stride-samples the reference-scale four-division enumeration
 (tests/corpus.py, ~13.5k query×strategy combos) so the systematic
@@ -47,7 +49,7 @@ def main() -> int:
     ap.add_argument(
         "--no-fastpath",
         action="store_true",
-        help="force every case through the applyInPandas NFA kernel "
+        help="force every case through the applyInArrow NFA kernel "
         "(by default the planner may dispatch to Catalyst fast paths, "
         "which is what production does but leaves the kernel itself "
         "unexercised for those combos)",

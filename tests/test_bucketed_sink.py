@@ -94,9 +94,11 @@ def test_unbucketed_baseline_does_exchange(spark, tmp_path, no_broadcast):
 
 def test_bucketed_cep_kernel_runs_shuffle_free(spark, tmp_path):
     """The standing-event-log shape: events bucketed on the CEP key run
-    match_pattern(pre_partitioned=True) with ZERO exchanges — Scan →
-    Sort → FlatMapGroupsInPandas — and emit exactly the matches of the
-    default (repartitioning) path."""
+    match_pattern(pre_partitioned=True) with ZERO exchanges — a
+    bucketed Scan → Sort → FlatMapGroupsInArrow — and emit exactly the
+    matches of the default (repartitioning) path.  The scan must really
+    read the buckets: this small table would also pass the equality
+    check through a non-bucketed scan that splits keys by accident."""
     from reflinkcep_spark.cep.query import Pattern
     from reflinkcep_spark.operators import match_pattern
 
@@ -116,7 +118,8 @@ def test_bucketed_cep_kernel_runs_shuffle_free(spark, tmp_path):
         fast = match_pattern(spark.table("t_ev_cep"), q, pre_partitioned=True, **kw)
         plan = _formatted_plan(fast)
         assert _n_shuffles(plan) == 0, plan
-        assert "FlatMapGroupsInPandas" in plan
+        assert "FlatMapGroupsInArrow" in plan
+        assert "Bucketed: true" in plan, plan
 
         base = match_pattern(ev, q, **kw)
         key = ["user_id", "match_seq", "start_ord", "end_ord"]

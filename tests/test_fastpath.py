@@ -222,7 +222,8 @@ def test_fastpath_declines_relaxed(spark):
 
 def test_fastpath_spat_plan_is_pythonless(spark):
     """The dispatched plan for a single spat must not contain the
-    Python evaluator (no ArrowEvalPython/FlatMapGroupsInPandas)."""
+    Python evaluator (no ArrowEvalPython, no grouped map in pandas or
+    Arrow form)."""
     query = Query.from_yaml(Q_SPAT)
     df = _df(spark, STREAM)
     out = match_pattern(
@@ -230,5 +231,5 @@ def test_fastpath_spat_plan_is_pythonless(spark):
         allow_fastpath=True,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapGroupsIn" not in plan
     assert "Filter" in plan

@@ -127,6 +127,31 @@ context:
     assert got_pairs == expected_pairs
 
 
+def test_kernel_runs_one_task_per_core(spark):
+    """The kernel's one keyed exchange has defaultParallelism
+    partitions — not spark.sql.shuffle.partitions — and AQE, on in the
+    session, does not coalesce it."""
+    import re
+
+    from reflinkcep_spark.operators.cep import kernel_partitions
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    name, qyaml, stream, _expected = KERNEL_CASES[0]
+    out = match_pattern(
+        _events_df(spark, stream, n_keys=50), Query.from_yaml(qyaml, name=name),
+        order_by="id", partition_by="user_id", type_col="type",
+        allow_fastpath=False,
+    )
+    n = spark.sparkContext.defaultParallelism
+    assert kernel_partitions(spark) == n
+    assert out.rdd.getNumPartitions() == n
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert re.findall(r"Exchange (\w+)\(user_id#\d+, (\d+)\)", final) == [
+        ("hashpartitioning", str(n))
+    ], plan
+
+
 def test_kernel_run_limit_guard(spark):
     """nd-relaxed over an all-matching stream doubles the live run-set
     per event; the max_active_runs guard must fail fast with a clear
@@ -153,6 +178,42 @@ context:
     )
     with _pytest.raises(Exception, match="exceeded 1000"):
         out.collect()
+
+
+def test_kernel_null_attributes(spark):
+    """NULLs in a long condition column and a double column: a NULL
+    ``price`` reaches the condition as NaN (compares False, never a
+    TypeError), so its row never matches, and NULL fields come back
+    NULL in the capture structs."""
+    from reflinkcep_spark.cep.query import Pattern
+
+    q = (
+        Pattern.begin("a", event="e", where="price > 5")
+        .followed_by("b", event="e", where="price > 7")
+        .query(schema={"e": ["id", "price", "amt"]})
+    )
+    rows = [
+        (0, 1, "e", 6, 1.0),
+        (0, 2, "e", None, 2.0),
+        (0, 3, "e", 8, None),
+        (1, 4, "e", 9, None),
+        (1, 5, "e", 8, 5.0),
+        (1, 6, "e", None, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id int, id long, type string, price long, amt double"
+    )
+    out = match_pattern(
+        df, q, order_by="id", partition_by="user_id", type_col="type",
+        allow_fastpath=False,
+    ).collect()
+    got = sorted((r["user_id"], r["start_ord"], r["end_ord"]) for r in out)
+    assert got == [(0, 1, 3), (1, 4, 5)]
+    caps = {
+        r["user_id"]: [(e["id"], e["price"], e["amt"]) for e in r["a"] + r["b"]]
+        for r in out
+    }
+    assert caps == {0: [(1, 6, 1.0), (3, 8, None)], 1: [(4, 9, None), (5, 8, 5.0)]}
 
 
 def test_kernel_global_stream(spark):
@@ -336,7 +397,7 @@ def test_engine_handles_more_than_64_states():
 
 
 def test_records_matches_to_dict_records():
-    """The round-14 fast converter (operators.cep.records) must build
+    """The round-14 fast converter (streaming.cep.records) must build
     dicts identical to pdf[cols].to_dict("records") for every value
     class the kernel ships: int64, float64 (incl. NaN), object strings
     (incl. None), bool, and datetime64 Timestamps — same keys, same
@@ -345,7 +406,7 @@ def test_records_matches_to_dict_records():
 
     import pandas as pd
 
-    from reflinkcep_spark.operators.cep import records
+    from reflinkcep_spark.streaming.cep import records
 
     pdf = pd.DataFrame(
         {
@@ -381,14 +442,14 @@ def test_records_matches_to_dict_records():
 
 
 def test_frame_matches_list_of_dicts_constructor():
-    """The round-14 output-side builder (operators.cep.frame) must
+    """The round-14 output-side builder (streaming.cep.frame) must
     produce frames identical to pd.DataFrame(rows, columns=cols) for
     the kernels' row shapes: full-key dicts, int/None bounds, list-of-
     dict capture cells, all-None capture columns, and the zero-row
     case (object-dtype empty, the list-of-dicts constructor's result)."""
     import pandas as pd
 
-    from reflinkcep_spark.operators.cep import frame
+    from reflinkcep_spark.streaming.cep import frame
 
     cols = ["user_id", "match_seq", "start_ord", "end_ord", "a", "b"]
     rows = [
@@ -401,10 +462,6 @@ def test_frame_matches_list_of_dicts_constructor():
     want = pd.DataFrame(rows, columns=cols)
     got = frame(rows, cols)
     pd.testing.assert_frame_equal(got, want)
-    # zero rows: identical empty frame whether or not a cache is passed
+    # zero rows: identical empty frame
     want0 = pd.DataFrame([], columns=cols)
-    empty = pd.DataFrame(columns=cols)
-    pd.testing.assert_frame_equal(frame([], cols, empty), want0)
     pd.testing.assert_frame_equal(frame([], cols), want0)
-    # the cached object is returned as-is (no copy per group)
-    assert frame([], cols, empty) is empty

@@ -130,6 +130,46 @@ def test_stream_skip_strategy_state(spark, tmp_path):
     assert _canon_caps(spark.table(sink).collect(), ["errs"]) == want
 
 
+def test_stream_run_limit_raises_match_limit_exceeded(spark, tmp_path):
+    """The streaming kernel shares the batch kernel's run-limit check:
+    an nd-relaxed blowup on a hot key fails the query with
+    MatchLimitExceeded naming the key, not a bare RuntimeError."""
+    query = Query.from_dict(
+        {
+            "patseq": {
+                "type": "lpat-inf",
+                "name": "a",
+                "event": "e",
+                "cndt": {"expr": "True"},
+                "loop": {"contiguity": "nd-relaxed", "from": 1},
+            },
+            "context": {"schema": {"e": ["id", "name", "price"]}},
+        }
+    )
+    src = tmp_path / "src"
+    spark.createDataFrame(
+        [(7, i + 1, "e", 1, 1) for i in range(40)], SCHEMA
+    ).coalesce(1).write.parquet(str(src))
+    out = match_pattern_stream(
+        spark.readStream.schema(SCHEMA).parquet(str(src)),
+        query, order_by="id", partition_by="user_id", type_col="type",
+        max_active_runs=50,
+    )
+    q = (
+        out.writeStream.format("memory")
+        .queryName(f"stream_limit_{os.getpid()}")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception) as err:
+        q.awaitTermination(120)
+    msg = str(err.value)
+    assert "MatchLimitExceeded" in msg and "exceeded 50" in msg, msg
+    assert "{'user_id': 7}" in msg, msg
+
+
 Q_ITER = """
 type: query
 patseq:
